@@ -1,6 +1,6 @@
 """Partitioned Bloom-filter URL-seen set (SURVEY.md C4, north rule:
-"partitioned bloom/cuckoo-filter URL-seen set keyed by canonicalized
-URL hash").
+a partitioned approximate-membership URL-seen set keyed by
+canonicalized URL hash).
 
 Design: the seen set is sharded by the first 4 bytes of the md5 url
 key mod P; each shard owns an independent Bloom bitmap sized for its
@@ -132,10 +132,6 @@ def build_bloom_shards(
         .groupBy("__shard")
         .applyInPandas(build, schema=BLOOM_SHARDS_SCHEMA)
     )
-
-
-# uniform seen-filter interface (engine swaps bloom/cuckoo by module)
-build_shards = build_bloom_shards
 
 
 def prefilter_new(

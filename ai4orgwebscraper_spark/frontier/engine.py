@@ -26,11 +26,11 @@ Scale notes (the 1000-executor view):
 - the seen set is APPEND-ONLY delta parts; the cumulative
   multiplicity aggregation runs once at the end, so no round ever
   reshuffles the full seen table;
-- iterative-state lineage is truncated per round (_spill): states the
-  engine can bound with a deterministic history proxy use
-  localCheckpoint (one job, no file commit); large/unbounded states
-  keep the durable parquet round-trip on tmpfs — the Iceberg-snapshot
-  shape;
+- iterative-state lineage is truncated per round (plans.state.RunState,
+  run-lifetime retention): states the engine can bound with a
+  deterministic history proxy use localCheckpoint (one job, no file
+  commit); large/unbounded states keep the durable parquet round-trip
+  on tmpfs — the Iceberg-snapshot shape;
 - every round commits the frontier snapshot + output increments with
   an atomic manifest (checkpoint.py) → kill/resume is bit-identical
   (north rule).
@@ -49,10 +49,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ai4orgwebscraper_spark import schemas
+from ai4orgwebscraper_spark.frontier import bloom
 from ai4orgwebscraper_spark.frontier import checkpoint as ckpt
 from ai4orgwebscraper_spark.frontier.fetch import fetch_arrow_fn
 from ai4orgwebscraper_spark.functions import urls as U
 from ai4orgwebscraper_spark.plans import with_global_seq
+from ai4orgwebscraper_spark.plans.state import RunState
 from ai4orgwebscraper_spark.sources.corpus import default_hosts
 
 FETCH_LOG_COLS = [f.name for f in schemas.FETCH_LOG.fields]
@@ -174,7 +176,6 @@ class CrawlEngine:
         salt_buckets: int | None = None,
         collect_metrics: bool = False,
         use_bloom_prefilter: bool | str = "auto",
-        seen_filter: str = "bloom",
         rank_scores: DataFrame | None = None,
         rank_scores_tag: str = "",
         refresh_seeds: bool = False,
@@ -191,14 +192,6 @@ class CrawlEngine:
         self.salt_buckets = salt_buckets
         self.collect_metrics = collect_metrics
         self.use_bloom_prefilter = use_bloom_prefilter
-        # "bloom" | "cuckoo" — which approximate seen-set prefilter the
-        # BFS path shards (frontier/bloom.py vs frontier/cuckoo.py).
-        # Result-transparent either way (exact anti-join stays the
-        # authority), so NOT part of the config fingerprint; cuckoo adds
-        # deletion support for state rollbacks.
-        if seen_filter not in ("bloom", "cuckoo"):
-            raise ValueError(f"seen_filter must be 'bloom' or 'cuckoo', got {seen_filter!r}")
-        self.seen_filter = seen_filter
         # rank-weighted frontier priority (north rule: "priority queue
         # (depth + host-budget score)"; graph.py's PageRank is the
         # canonical producer): (url_hash, score) joined into each
@@ -229,21 +222,10 @@ class CrawlEngine:
         # intake, in-loop offers, carry-replayed offers — before seen
         # counting, in lockstep with oracle.bfs_crawl(trap_guard=True)
         self.trap_guard = trap_guard
-        # budgeted tmpfs spill dir for iterative-state truncation (see
-        # _spill): shared helper with plans.iterate.spill_loop (ADVICE
-        # r02 / VERDICT r03 weak #2 — never ENOSPC a RAM-backed tmpfs;
-        # once live spill bytes cross half the backing fs's free space,
-        # later spills land on a disk-backed overflow dir). Engine
-        # spills are retained for the run's lifetime (lineage-bearing),
-        # so live == cumulative here.
-        from ai4orgwebscraper_spark.plans.spill import BudgetedSpillDir
-
-        self._spill_dirs = BudgetedSpillDir("crawl_state_")
-        # run-scoped persisted DataFrames, released in close()
-        self._pinned: list[DataFrame] = []
-        # run-scoped localCheckpoint references (see _spill): dropped in
-        # close() so the ContextCleaner can reclaim the blocks
-        self._ckpts: list[DataFrame] = []
+        # run-scoped state: truncated rounds, pinned fetch results and
+        # global-seq bases, all kept for the run (lineage-bearing) and
+        # released by close()
+        self.state = RunState("crawl_state_")
         # semantics-bearing config only (bloom/salting are result-
         # transparent, max_rounds is a stop condition — extending it to
         # continue a crawl is a legitimate resume)
@@ -297,54 +279,6 @@ class CrawlEngine:
             out = out.filter(~U.is_trap_col(U.path_col(F.col("url"))))
         return out
 
-    def _seen_filter_mod(self):
-        if self.seen_filter == "cuckoo":
-            from ai4orgwebscraper_spark.frontier import cuckoo as M
-        else:
-            from ai4orgwebscraper_spark.frontier import bloom as M
-        return M
-
-    def _spill(
-        self, df: DataFrame, name: str, rnd: int, est_rows: int | None = None
-    ) -> DataFrame:
-        """Truncate iterative lineage via a parquet round-trip on tmpfs.
-
-        r6 (guide §2/§5): when the caller can bound the state size with
-        a DETERMINISTIC estimate (``est_rows`` — the engine's existing
-        crawl-history proxies, e.g. fetches x max fan-out) and it is
-        under plans.iterate's localCheckpoint threshold, lineage is
-        truncated via ``localCheckpoint`` instead: one job, no file
-        commit, blocks retained for the run (self._ckpts keeps the
-        references; close() releases them) — the same retention
-        contract as the spill files. Large or unbounded states keep
-        the parquet path below unchanged.
-
-        A columnar parquet write+read truncates lineage like a
-        checkpoint at a fraction of localCheckpoint's Java-serialization
-        cost, and is exactly what the Iceberg-snapshot layer does in
-        production. Spill files are RETAINED for the engine's lifetime
-        (close()/atexit cleans up): long-lived DataFrames — run-long
-        persisted fetch results, the returned CrawlOutputs — keep
-        lineage into earlier spills, and deleting a still-referenced
-        spill would turn any cache-partition loss on a real cluster
-        into FileNotFoundException at recompute (ADVICE r01). Disk is
-        bounded by sum-of-round-state, the same envelope the Iceberg
-        snapshot history holds in production. When cumulative spill
-        size crosses the tmpfs budget, subsequent spills fall back to a
-        disk-backed directory (ADVICE r02 — never ENOSPC a RAM-backed
-        tmpfs mid-crawl); already-written files stay put, still
-        referenced by live lineage."""
-        from ai4orgwebscraper_spark.plans.iterate import _local_ckpt_max_rows
-
-        if est_rows is not None and est_rows <= _local_ckpt_max_rows():
-            out = df.localCheckpoint(eager=True)
-            self._ckpts.append(out)
-            return out
-        path = os.path.join(self._spill_dirs.next_dir(), f"{name}_{rnd}")
-        df.write.mode("overwrite").parquet(path)
-        self._spill_dirs.note_written(path)
-        return self.spark.read.parquet(path)
-
     def close(self) -> None:
         """Release run-scoped state: unpersist every cached DataFrame
         the run pinned (per-round fetch results + global-seq bases —
@@ -352,14 +286,7 @@ class CrawlEngine:
         r01) and delete the spill directory. Call after the
         CrawlOutputs DataFrames have been fully consumed (collected or
         written out) — they read from these caches/files."""
-        for df in self._pinned:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        self._pinned.clear()
-        self._ckpts.clear()
-        self._spill_dirs.cleanup()
+        self.state.close()
 
     # target rows per fetch task: python-worker spawn is ~0.3-0.5s with
     # reuse off (session.py), so a near-empty late-round batch must not
@@ -454,7 +381,7 @@ class CrawlEngine:
         seq_stats: dict = {}
         frontier = with_global_seq(
             self._canonical_seeds(seeds), ["seed_rank"], seq_col="seq",
-            offset=seq_offset, assume_sorted=True, pin_registry=self._pinned,
+            offset=seq_offset, assume_sorted=True, pin_registry=self.state.pinned,
             stats=seq_stats,
         )
         frontier = frontier.withColumn(
@@ -629,7 +556,7 @@ class CrawlEngine:
         cur = improvements
         for step in range(self.max_depth):
             # apply the improvements to the best-known depth table
-            carry_best = self._spill(
+            carry_best = self.state.truncate(
                 carry_best.unionByName(
                     cur.select(
                         "url_hash",
@@ -645,7 +572,7 @@ class CrawlEngine:
                 f"carry_best_s{step}", first_seen_round,
             )
             parents = cur.filter(F.col("depth") < F.lit(self.max_depth))
-            offers = self._spill(
+            offers = self.state.truncate(
                 self._cached_offers(parents, carry_links),
                 f"relax_offers_s{step}", first_seen_round,
             )
@@ -666,7 +593,7 @@ class CrawlEngine:
                 )
             )
             excluded_keys = excluded_keys.unionByName(offers.select("url_hash"))
-            cur = self._spill(
+            cur = self.state.truncate(
                 offers.join(carry_best, "url_hash")
                 .filter(F.col("depth") < F.col("best_depth"))
                 .select("url_hash", "depth", "node_seq"),
@@ -733,7 +660,7 @@ class CrawlEngine:
                     "multiplicity",
                 )
             )
-            seen_parts = [self._spill(seed_delta, "seen_delta", -1)]
+            seen_parts = [self.state.truncate(seed_delta, "seen_delta", -1)]
             frontier = (
                 canon.groupBy("url_hash", "url", "host")
                 .agg(F.min("seed_rank").alias("seed_rank"), F.min("depth").alias("depth"))
@@ -743,7 +670,7 @@ class CrawlEngine:
                 )
             )
             if carry is not None:
-                prev_seen = self._spill(
+                prev_seen = self.state.truncate(
                     carry.seen.select(
                         "url_hash", "url", "first_seen_round", "multiplicity"
                     ),
@@ -761,7 +688,7 @@ class CrawlEngine:
                 # the cached link graph and the best-known fetch depth
                 # (+ carry seq, the deterministic seed_rank base) of
                 # every carry-fetched node
-                carry_links = self._spill(
+                carry_links = self.state.truncate(
                     carry.outlinks.select("url_hash", "host", "href")
                     if carry.outlinks is not None
                     else spark.createDataFrame(
@@ -772,14 +699,14 @@ class CrawlEngine:
                 if carry.fetch_depths is not None:
                     # incrementally maintained by the previous run —
                     # no re-aggregation of the cumulative log
-                    carry_best = self._spill(
+                    carry_best = self.state.truncate(
                         carry.fetch_depths.select(
                             "url_hash", "best_depth", "node_seq"
                         ),
                         "carry_best", start_round - 1,
                     )
                 else:
-                    carry_best = self._spill(
+                    carry_best = self.state.truncate(
                         carry.fetch_log.groupBy("url_hash").agg(
                             F.min("depth").alias("best_depth"),
                             F.min("seq").alias("node_seq"),
@@ -800,7 +727,7 @@ class CrawlEngine:
                     # outlinks; only record the depth-0 improvement so
                     # later offers can't spuriously replay the stale
                     # cache over the fresh fetch
-                    carry_best = self._spill(
+                    carry_best = self.state.truncate(
                         carry_best.unionByName(
                             seeds_improved.select(
                                 "url_hash",
@@ -835,8 +762,8 @@ class CrawlEngine:
         run_seq0 = seq_counter if carry is not None else 0
 
         # deterministic crawl-history size proxy (fetches x max
-        # fan-out): routes _spill between localCheckpoint and parquet
-        # (r6) and drives the bloom auto-threshold below
+        # fan-out): routes truncation between localCheckpoint and
+        # parquet (r6) and drives the bloom auto-threshold below
         seen_est = seq_counter * 5
 
         # cross-round politeness clock (VERDICT r01 item 8): per-host
@@ -844,7 +771,7 @@ class CrawlEngine:
         # gap can never undercut crawl_delay. On resume this rebuilds
         # from the loaded cumulative log (one tiny agg); fresh starts
         # get the same agg over the empty log — identical code path.
-        host_clock = self._spill(
+        host_clock = self.state.truncate(
             fetch_log_cum.groupBy("host").agg(F.max("fetched_at_ms").alias("__last_ms")),
             "host_clock", start_round - 1, est_rows=max(seen_est, 1),
         )
@@ -875,13 +802,13 @@ class CrawlEngine:
         )
         bloom_active = self.use_bloom_prefilter is True
 
-        B = self._seen_filter_mod()
-
         def _bloom_catchup() -> None:
             for i, p in enumerate(seen_parts):
                 if i >= len(bloom_parts):
                     bloom_parts.append(
-                        self._spill(B.build_shards(p), f"bloom_init{i}", 0)
+                        self.state.truncate(
+                            bloom.build_bloom_shards(p), f"bloom_init{i}", 0
+                        )
                     )
 
         if bloom_active:
@@ -912,7 +839,7 @@ class CrawlEngine:
             # counts grow superlinearly with round number. The FAT
             # tables (fetch results) use columnar persist instead (~10x
             # faster materialization) since their lineage is flat.
-            frontier = self._spill(
+            frontier = self.state.truncate(
                 frontier, "frontier", rnd,
                 # round 0 of a fresh crawl has no history proxy yet —
                 # unbounded seed lists keep the durable parquet path
@@ -964,7 +891,7 @@ class CrawlEngine:
             seq_stats: dict = {}
             admitted = with_global_seq(
                 admitted, ["priority", "seed_rank"], seq_col="seq",
-                offset=seq_counter, pin_registry=self._pinned, stats=seq_stats,
+                offset=seq_counter, pin_registry=self.state.pinned, stats=seq_stats,
             )
             _tick("admission+seq", _t)
 
@@ -973,12 +900,10 @@ class CrawlEngine:
             # memory is bounded by the crawl's own output size (at true
             # 10^10 scale checkpoint mode streams each round to parquet
             # instead)
-            results = (
+            results = self.state.pin(
                 self._salted_fetch(admitted, n_rows=seq_stats.get("rows"))
                 .withColumn("round", F.lit(rnd))
-                .persist()
             )
-            self._pinned.append(results)
             n_fetched = results.count()
             _tick(f"fetch ({n_fetched})", _t)
             if n_fetched == 0 and rest.isEmpty():
@@ -1046,7 +971,7 @@ class CrawlEngine:
 
             # ONE spill serves both roles: the dedup candidate set and
             # the round's seen delta (projection)
-            offer_counts = self._spill(
+            offer_counts = self.state.truncate(
                 offers.groupBy("url_hash", "url", "host")
                 .agg(F.count("*").alias("multiplicity"), F.min("depth").alias("depth"),
                      F.min("seed_rank").alias("seed_rank"))
@@ -1066,7 +991,7 @@ class CrawlEngine:
                 bloom_active = True
                 _bloom_catchup()  # backfill shard parts for prior deltas
             if bloom_active:
-                flagged = B.prefilter_new(offer_counts, bloom_parts)
+                flagged = bloom.prefilter_new(offer_counts, bloom_parts)
                 definitely_new = flagged.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
                 maybe_seen_rows = flagged.filter(F.col("__maybe_seen")).drop("__maybe_seen")
                 new_urls = definitely_new.unionByName(
@@ -1100,7 +1025,7 @@ class CrawlEngine:
             # already offered this round are excluded so a child is
             # fetched through exactly one path.
             if carry is not None:
-                imp = self._spill(
+                imp = self.state.truncate(
                     offer_counts.join(carry_best, "url_hash")
                     .filter(F.col("depth") < F.col("best_depth"))
                     .select("url_hash", "depth", "node_seq"),
@@ -1123,13 +1048,13 @@ class CrawlEngine:
                         seen_parts.append(d)
                         if bloom_active:
                             bloom_parts.append(
-                                self._spill(
-                                    B.build_shards(d),
+                                self.state.truncate(
+                                    bloom.build_bloom_shards(d),
                                     f"bloom_relax{len(seen_parts)}", rnd,
                                 )
                             )
             # advance the cross-round clock with this round's fetches
-            host_clock = self._spill(
+            host_clock = self.state.truncate(
                 host_clock.unionByName(
                     results.groupBy("host").agg(
                         F.max("fetched_at_ms").alias("__last_ms")
@@ -1148,10 +1073,12 @@ class CrawlEngine:
                 # expected cardinality from this round's fetch volume
                 # (outlink fan-out <= 5) — skips a count() job
                 bloom_parts.append(
-                    self._spill(
-                        B.build_shards(
+                    self.state.truncate(
+                        bloom.build_bloom_shards(
                             seen_delta,
-                            expected_per_shard=max(64, n_fetched * 5 // B.DEFAULT_SHARDS),
+                            expected_per_shard=max(
+                                64, n_fetched * 5 // bloom.DEFAULT_SHARDS
+                            ),
                         ),
                         "bloom", rnd,
                     )

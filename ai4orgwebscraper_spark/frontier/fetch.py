@@ -12,14 +12,12 @@ pipelined async HTTP per batch, with a per-executor connection pool
 (the per-partition analog of the reference's ``requests.Session``
 reuse, web_scraper_js.py:26).
 
-``fetch_map_fn``/``_fetch_batch`` below is the original scalar
-mapInPandas twin — kept as the readable reference implementation and
-as the parity target of tests/test_fetch_vectorized.py.
+``_fetch_batch`` below is the original scalar per-row pandas body —
+kept as the readable reference implementation and as the parity
+target of tests/test_fetch_vectorized.py.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -91,18 +89,6 @@ def _fetch_batch(pdf: pd.DataFrame) -> pd.DataFrame:
         },
         columns=_COLS,
     )
-
-
-def fetch_map_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    # Drain the input stream BEFORE yielding any output: a worker that
-    # writes output while the JVM is still streaming input can deadlock
-    # on mutual socket backpressure (worker wedged in tcp_sendmsg, JVM
-    # writer blocked, observed on multi-million-row stages). Partition
-    # sizing bounds the buffer (2x-parallelism partitions -> ~100k rows
-    # per task).
-    pending = [pdf for pdf in batches if len(pdf) > 0]
-    for pdf in pending:
-        yield _fetch_batch(pdf)
 
 
 # ---------------------------------------------------------------------------
@@ -375,7 +361,13 @@ def _fetch_arrow_batch(b):
 
 
 def fetch_arrow_fn(batches):
-    """mapInArrow twin of fetch_map_fn — same drain-first discipline."""
+    """The engine's mapInArrow fetch stage."""
+    # Drain the input stream BEFORE yielding any output: a worker that
+    # writes output while the JVM is still streaming input can deadlock
+    # on mutual socket backpressure (worker wedged in tcp_sendmsg, JVM
+    # writer blocked, observed on multi-million-row stages). Partition
+    # sizing bounds the buffer (2x-parallelism partitions -> ~100k rows
+    # per task).
     pending = [b for b in batches if b.num_rows > 0]
     for b in pending:
         yield _fetch_arrow_batch(b)

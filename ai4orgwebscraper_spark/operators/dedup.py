@@ -384,15 +384,14 @@ def connected_components(
     because every label value is itself a node id in the same component
     and labels are monotonically non-increasing.
 
-    Each step is spilled to a parquet round-trip on tmpfs (NOT merely
-    persisted — persist caches partitions but leaves the logical plan
-    growing, and Catalyst analysis time doubles per iteration: the
-    sf0.1 loop went 1.2s -> 42s per iteration before lineage
-    truncation; and unlike localCheckpoint, superseded steps are plain
-    files DELETED two iterations back, so retained state is O(2 x
-    |nodes|)). A changed-count of zero stops the loop; hitting
-    ``max_iter`` with labels still moving raises ConvergenceError —
-    never a silent partial answer."""
+    Each step's lineage is truncated (``plans.state.RunState``, NOT
+    merely persisted — persist caches partitions but leaves the
+    logical plan growing, and Catalyst analysis time doubles per
+    iteration: the sf0.1 loop went 1.2s -> 42s per iteration before
+    lineage truncation); superseded steps are released two iterations
+    back, so retained state is O(2 x |nodes|). A changed-count of zero
+    stops the loop; hitting ``max_iter`` with labels still moving
+    raises ConvergenceError — never a silent partial answer."""
     from ai4orgwebscraper_spark.plans.iterate import loop_width, spill_loop
 
     fwd = edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
@@ -407,7 +406,10 @@ def connected_components(
     # runs under-parallelized inside the loop.
     adj = fwd.unionByName(rev).repartition(loop_width(spark, n_nodes), "src")
     with spill_loop(spark, n_nodes, statics=[adj], prefix="cc_state_") as ctx:
-        labels = _run_cc_loop(spark, adj, nodes, max_iter, ctx.spill)
+        labels = _run_cc_loop(
+            spark, adj, nodes, max_iter,
+            lambda df, i: ctx.truncate(df, "step", i, n_nodes),
+        )
     return labels
 
 

@@ -58,8 +58,9 @@ def pagerank(
         .repartition(loop_width(spark, n_nodes), "src")
     )
     with spill_loop(spark, n_nodes, statics=[adj], prefix="pr_state_") as ctx:
-        ranks = ctx.spill(
-            nodes.select(F.col("id"), F.lit(1.0 / n_nodes).alias("rank")), 0
+        ranks = ctx.truncate(
+            nodes.select(F.col("id"), F.lit(1.0 / n_nodes).alias("rank")),
+            "step", 0, n_nodes,
         )
         # the persisted adjacency also serves as the linking-node set
         # for the dangling test — deg itself is never read in the loop,
@@ -80,7 +81,7 @@ def pagerank(
             dangling = ranks.join(
                 linkers, ranks.id == linkers.src, "left_anti"
             ).agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm"))
-            ranks = ctx.spill(
+            ranks = ctx.truncate(
                 ranks.select("id")
                 .join(contrib, F.col("id") == F.col("dst"), "left")
                 .crossJoin(F.broadcast(dangling))
@@ -95,7 +96,7 @@ def pagerank(
                         )
                     ).alias("rank"),
                 ),
-                it,
+                "step", it, n_nodes,
             )
     return ranks
 

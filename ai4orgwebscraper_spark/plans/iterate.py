@@ -1,15 +1,13 @@
 """Shared harness for iterative DataFrame algorithms (connected
-components, PageRank, any fixpoint loop): per-step parquet spill for
-lineage truncation, eager deletion of superseded steps, and shuffle
-width sized to the STATE table rather than the session's corpus-tuned
-default.
+components, PageRank, any fixpoint loop): shuffle width sized to the
+STATE table rather than the session's corpus-tuned default, and
+statics materialized before that width is narrowed. Per-step lineage
+truncation is ``plans.state.RunState`` with two-step retention.
 
 Why each piece exists:
-- **Spill, not persist**: persist caches partitions but leaves the
+- **Truncate, not persist**: persist caches partitions but leaves the
   logical plan growing — Catalyst analysis time doubles per iteration
-  (1.2s → 42s/iter observed before truncation). A parquet round-trip
-  resets lineage; superseded steps are plain files deleted two
-  iterations back, so retained state is O(2 × |state|).
+  (1.2s → 42s/iter observed before truncation).
 - **Loop width**: iterative state is |nodes| rows — tiny next to the
   corpus — and AQE's parallelismFirst never coalesces the session
   width down, so every iteration pays stages × near-empty tasks of
@@ -25,30 +23,13 @@ Why each piece exists:
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
-from dataclasses import dataclass
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ai4orgwebscraper_spark.plans.spill import BudgetedSpillDir
+from ai4orgwebscraper_spark.plans.state import RunState
 
 ROWS_PER_PARTITION = 500_000
-
-# Lineage-truncation strategy switch (r6, guide §2/§5): below this
-# many state rows a parquet round-trip per step is pure overhead —
-# two jobs + file commit against kilobytes of state — and
-# localCheckpoint (one job, blocks in the executor storage tier,
-# lineage truncated identically) is strictly cheaper. Above it, the
-# parquet spill remains the right shape: durable files survive
-# executor loss and bound memory explicitly, which is what a
-# 10^9-node loop needs. The bound is on STATE ROWS (known to every
-# caller for free — it already sizes the loop width), not on cores,
-# so the choice scales with the data, not the machine.
-def _local_ckpt_max_rows() -> int:
-    # read per call so tests can pin either branch
-    return int(os.environ.get("SPARK_GRAFT_LOCAL_CKPT_MAX_ROWS", "5000000"))
 
 
 def loop_width(spark: SparkSession, n_state_rows: int) -> int:
@@ -62,13 +43,6 @@ def loop_width(spark: SparkSession, n_state_rows: int) -> int:
     )
 
 
-@dataclass
-class SpillLoop:
-    spill: Callable[[DataFrame, int], DataFrame]
-    loop_parts: int
-    dirs: BudgetedSpillDir
-
-
 @contextmanager
 def spill_loop(
     spark: SparkSession,
@@ -80,45 +54,20 @@ def spill_loop(
 
     ``statics`` are persisted and force-materialized at the SESSION
     shuffle width before the width is narrowed for the loop, then
-    unpersisted on exit. Inside the block, ``ctx.spill(df, i)`` writes
-    step ``i`` to the budgeted spill dir (tmpfs until the live-bytes
-    budget is hit, disk after — VERDICT r03: unguarded tmpfs ENOSPCs
-    at 10^9-node state), deletes step ``i-2``, and returns the
-    lineage-free reader."""
-    dirs = BudgetedSpillDir(prefix)
-    step_paths: dict[int, str] = {}
-    # keep a reference to each localCheckpoint step until superseded
-    # (two-back, mirroring the file deletion): popping the reference
-    # lets the ContextCleaner reclaim the checkpoint blocks
-    step_ckpts: dict[int, DataFrame] = {}
-    use_local_ckpt = n_state_rows <= _local_ckpt_max_rows()
-
+    unpersisted on exit. Yields a ``RunState`` keeping the last two
+    steps: ``state.truncate(df, "step", i, n_state_rows)`` cuts step
+    ``i``'s lineage and releases step ``i-2``. The state is not closed
+    on exit — the loop's result reads from its last step; its dirs are
+    removed at interpreter exit."""
     sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    loop_parts = loop_width(spark, n_state_rows)
-
     statics = statics or []
     for s in statics:
         s.persist()
         s.count()  # materialize heavy upstream lineage at session width
 
-    def spill(df: DataFrame, i: int) -> DataFrame:
-        if use_local_ckpt:
-            out = df.localCheckpoint(eager=True)
-            step_ckpts[i] = out
-            step_ckpts.pop(i - 2, None)
-            return out
-        path = os.path.join(dirs.next_dir(), f"step_{i}")
-        df.write.mode("overwrite").parquet(path)
-        dirs.note_written(path)
-        step_paths[i] = path
-        old = step_paths.pop(i - 2, None)
-        if old:
-            dirs.delete(old)
-        return spark.read.parquet(path)
-
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
+    spark.conf.set("spark.sql.shuffle.partitions", str(loop_width(spark, n_state_rows)))
     try:
-        yield SpillLoop(spill=spill, loop_parts=loop_parts, dirs=dirs)
+        yield RunState(prefix, keep_steps=2)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", str(sess_parts))
         for s in statics:

@@ -49,7 +49,7 @@ def get_spark(
         # intermittently in this Spark build (fetch stages hang with the
         # JVM reader in epoll and a worker stuck in tcp_sendmsg — seen
         # even on 60-row stages, so it is not backpressure; drain-first
-        # in fetch_map_fn covers that separately). ~15 runs with
+        # in fetch_arrow_fn covers that separately). ~15 runs with
         # reuse=false incl. 8M-row stages never hung; the cost is a
         # pandas-import tax per task, ~1-2s per python stage.
         .config("spark.python.worker.reuse", "false")

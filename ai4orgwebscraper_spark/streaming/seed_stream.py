@@ -61,7 +61,7 @@ def stream_seed_ingestion(
     Scale shape: canonicalization is the engine's own codegen'd column
     exprs; the seen state is the state store's hash-partitioned keyed
     state (url_hash) — the streaming twin of the engine's sharded
-    bloom/cuckoo + exact anti-join; no driver state. The sink is
+    bloom prefilter + exact anti-join; no driver state. The sink is
     foreachBatch appending to parquet (the memory sink cannot recover
     a checkpoint), which is exactly where a deployment would hand each
     admitted micro-batch to the frontier; with a checkpoint_dir a later

@@ -131,7 +131,8 @@ def test_spill_loop_budget_overflow_lands_on_disk(spark, monkeypatch):
     """VERDICT r03 weak #2: spill_loop must honor the same tmpfs budget
     + disk fallback the engine uses. With an artificially tiny budget,
     step 0 lands on the primary (tmpfs) dir, later steps land on the
-    disk overflow dir, and loop results are identical."""
+    disk overflow dir, loop results are identical, and close() removes
+    the overflow dir."""
     import os
 
     from ai4orgwebscraper_spark.plans.iterate import spill_loop
@@ -141,21 +142,24 @@ def test_spill_loop_budget_overflow_lands_on_disk(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_LOCAL_CKPT_MAX_ROWS", "0")
     df = spark.range(200).select(F.col("id").alias("v"))
     with spill_loop(spark, 200, prefix="t_budget_") as ctx:
-        s = ctx.spill(df, 0)
+        s = ctx.truncate(df, "step", 0, 200)
         for i in range(1, 4):
-            s = ctx.spill(s.select((F.col("v") + 1).alias("v")), i)
-        assert ctx.dirs.overflow is not None
+            s = ctx.truncate(s.select((F.col("v") + 1).alias("v")), "step", i, 200)
+        assert ctx.overflow is not None
         last_files = s.inputFiles()  # 'file:' URIs — compare by substring
-        assert all(ctx.dirs.overflow in f for f in last_files)
+        assert all(ctx.overflow in f for f in last_files)
         # two-back deletion kept running across the dir switch
         live_steps = sorted(
             e.name
-            for d in (ctx.dirs.primary, ctx.dirs.overflow)
+            for d in (ctx.primary, ctx.overflow)
             for e in os.scandir(d)
         )
         assert live_steps == ["step_2", "step_3"]
         got = sorted(r["v"] for r in s.collect())
     assert got == list(range(3, 203))
+    ctx.close()
+    assert not os.path.exists(ctx.overflow)
+    assert not os.path.exists(ctx.primary)
 
 
 def test_spill_loop_within_budget_stays_on_tmpfs(spark, monkeypatch):
@@ -166,9 +170,9 @@ def test_spill_loop_within_budget_stays_on_tmpfs(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_LOCAL_CKPT_MAX_ROWS", "0")
     df = spark.range(10).select(F.col("id").alias("v"))
     with spill_loop(spark, 10, prefix="t_nobudget_") as ctx:
-        s = ctx.spill(df, 0)
-        s = ctx.spill(s, 1)
-        assert ctx.dirs.overflow is None
+        s = ctx.truncate(df, "step", 0, 10)
+        s = ctx.truncate(s, "step", 1, 10)
+        assert ctx.overflow is None
         assert s.count() == 10
 
 
@@ -182,11 +186,11 @@ def test_spill_loop_small_state_uses_local_checkpoint(spark):
 
     df = spark.range(50).select(F.col("id").alias("v"))
     with spill_loop(spark, 50, prefix="t_ckpt_") as ctx:
-        s = ctx.spill(df, 0)
+        s = ctx.truncate(df, "step", 0, 50)
         for i in range(1, 4):
-            s = ctx.spill(s.select((F.col("v") + 1).alias("v")), i)
-        assert os.listdir(ctx.dirs.primary) == []  # no parquet steps
-        assert ctx.dirs.overflow is None
+            s = ctx.truncate(s.select((F.col("v") + 1).alias("v")), "step", i, 50)
+        assert os.listdir(ctx.primary) == []  # no parquet steps
+        assert ctx.overflow is None
         # lineage is truncated: the plan bottoms out at an RDD scan,
         # not at the original range
         assert "ExistingRDD" in s._jdf.queryExecution().optimizedPlan().toString() or \

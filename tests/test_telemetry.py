@@ -40,9 +40,30 @@ def test_spill_overflow_falls_back_to_disk(spark, monkeypatch):
     out = engine.run(engine.seeds_from_list(seed_urls(30)))
     n = out.fetch_log.count()
     assert n > 0
-    dirs = engine._spill_dirs
+    dirs = engine.state
     assert dirs.overflow is not None and os.path.isdir(dirs.overflow)
     assert any(os.scandir(dirs.overflow))  # later spills landed on disk
     assert any(os.scandir(dirs.primary))  # earlier spills untouched
     engine.close()
     assert not os.path.exists(dirs.overflow)
+
+
+def test_close_releases_run_state(spark):
+    """ADVICE r01: close() unpersists every DataFrame a BFS run pinned
+    (per-round fetch results and global-seq bases) and deletes the
+    spill dirs — no cached data or tmpfs files outlive the engine."""
+    import os
+
+    from pyspark import StorageLevel
+
+    engine = CrawlEngine(spark, hosts=default_hosts(), max_depth=1, max_rounds=3)
+    out = engine.run(engine.seeds_from_list(seed_urls(30)))
+    assert out.fetch_log.count() > 0
+    state = engine.state
+    pinned = list(state.pinned)
+    assert pinned and all(df.storageLevel != StorageLevel.NONE for df in pinned)
+    assert any(os.scandir(state.primary))  # round 0 spilled to parquet
+    engine.close()
+    assert all(df.storageLevel == StorageLevel.NONE for df in pinned)
+    assert not os.path.exists(state.primary)
+    assert state.overflow is None or not os.path.exists(state.overflow)

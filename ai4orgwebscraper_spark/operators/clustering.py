@@ -247,51 +247,16 @@ def kmeans(
     return _assign(vectors, cents), cents
 
 
-_TRAINED_MEMO: dict[tuple, list[list[float]]] = {}
-
-
 def trained_kmeans(
     spark: SparkSession, sf_dir: str, k: int = K, iterations: int = ITERATIONS
 ) -> tuple[DataFrame, list[list[float]]]:
-    """Train-once semantics for the coarse quantizer: the IVF/SemDeDup
-    family shares ONE trained model per (session, table) — the
-    production shape (the quantizer is a build artifact; queries only
-    assign against it, PLANS.md describes the plans accordingly), and
-    what keeps a 5-query driver run from paying 5 identical Lloyd
-    trainings. Deterministic: the memo returns the exact floats the
-    training produced, so every consumer (and the unrolled DuckDB
-    oracle CTE) sees identical centroids."""
-    import os
-
+    """The coarse quantizer of the IVF/SemDeDup family: k-means trained
+    on the embeddings table, plus the corpus assigned to it. Every call
+    trains from the parquet inputs — no model is kept between calls, so
+    a query sees the table as it is now; a query that needs the model
+    twice trains once and passes the result along."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # memo key carries the data fingerprint (embeddings parquet mtimes)
-    # so a regenerated sf_dir in a live session retrains instead of
-    # serving stale centroids (ADVICE r05)
-    key = (
-        id(spark), os.path.abspath(sf_dir), k, iterations,
-        _emb_fingerprint(sf_dir),
-    )
-    if key in _TRAINED_MEMO:
-        cents = _TRAINED_MEMO[key]
-        if not cents:
-            return emb.limit(0).withColumn("cluster", F.lit(0)), []
-        return _assign(emb, cents), cents
-    assigned, cents = kmeans(emb, k, iterations)
-    _TRAINED_MEMO[key] = cents
-    return assigned, cents
-
-
-def _emb_fingerprint(sf_dir: str) -> float:
-    import os
-
-    p = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        mtimes = [os.path.getmtime(p)]
-        if os.path.isdir(p):
-            mtimes += [e.stat().st_mtime for e in os.scandir(p)]
-        return max(mtimes)
-    except OSError:
-        return 0.0
+    return kmeans(emb, k, iterations)
 
 
 def kmeans_py(

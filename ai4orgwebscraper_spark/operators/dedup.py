@@ -30,51 +30,6 @@ from ai4orgwebscraper_spark.sources.readers import load_table, load_wide
 N_SEEDS = 8
 SEEDS_PER_BAND = 2  # -> 4 bands
 
-# one persisted DataFrame per (call-site, sf_dir): repeat invocations
-# REUSE the live pin (the builders are deterministic per key, and
-# reuse preserves Spark's identical-plan cache semantics — an
-# unpersist-then-repersist would force a full recompute per call),
-# so session storage stays bounded at one cached DF per site without
-# ever discarding a warm cache (ADVICE r02 + review r03). The pin
-# carries a cheap data fingerprint (documents parquet mtimes) so a
-# regenerated sf_dir in the SAME session invalidates the cache instead
-# of silently serving stale shingles (ADVICE r04).
-_PINNED: dict[tuple[str, str], tuple[float, DataFrame]] = {}
-
-
-def _data_fingerprint(sf_dir: str) -> float:
-    import os
-
-    p = os.path.join(sf_dir, "documents.parquet")
-    try:
-        mtimes = [os.path.getmtime(p)]
-        if os.path.isdir(p):
-            mtimes += [e.stat().st_mtime for e in os.scandir(p)]
-        return max(mtimes)
-    except OSError:
-        return 0.0
-
-
-def _pin(site: str, sf_dir: str, df: DataFrame) -> DataFrame:
-    key = (site, sf_dir)
-    fp = _data_fingerprint(sf_dir)
-    cached = _PINNED.get(key)
-    if cached is not None:
-        old_fp, old = cached
-        try:
-            if old.sparkSession is df.sparkSession and old_fp == fp:
-                return old  # same live session + same data: warm cache
-            if old.sparkSession is df.sparkSession:
-                old.unpersist(blocking=False)  # data changed: invalidate
-            # session changed (stopped + recreated): the old context is
-            # gone — drop the stale reference WITHOUT unpersist (which
-            # would raise on the dead context)
-        except Exception:
-            pass
-        _PINNED.pop(key, None)
-    df = df.persist()
-    _PINNED[key] = (fp, df)
-    return df
 # junk-band suppression (standard LSH practice): a bucket with more
 # members than this carries no discriminative signal and would emit
 # O(size^2) pairs — at 10^10 docs a single degenerate band bucket
@@ -222,12 +177,8 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ELSE slice(toks, 1, 0) END"
     )
     # the PRUNED shingle stream feeds three consumers (sizes, both
-    # self-join sides) — persist it so the explode+concat+anti-join
-    # runs once, not three times (8.9s -> 3.3s cold at sf0.1; at 100TB
-    # this is the "materialize the inverted index" step every dedup
-    # system has). One cache per query, session-scoped, LRU-evicted —
-    # deliberately NOT a second raw-stream persist, whose handle would
-    # be unreleasable after reassignment.
+    # self-join sides); the two self-join sides are identical subtrees
+    # and share one exchange (ReusedExchange) inside the plan
     shingles = d.select(
         "doc_id", "source", F.explode(F.array_distinct(shingle_expr)).alias("shingle")
     )
@@ -241,10 +192,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("__df") > MAX_SHINGLE_DF)
         .select("source", "shingle")
     )
-    shingles = _pin(
-        "ngram_shingles", sf_dir,
-        shingles.join(hot, ["source", "shingle"], "left_anti"),
-    )
+    shingles = shingles.join(hot, ["source", "shingle"], "left_anti")
     sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
     a = shingles.alias("a")
     b = shingles.alias("b")
@@ -339,10 +287,11 @@ def lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw MinHash-LSH candidate pairs (doc_a < doc_b), deduped;
     over-dense buckets suppressed (MAX_BUCKET)."""
     # bands feed four consumers (bucket-size agg, anti-join left, both
-    # self-join sides) and each recompute re-runs the K-min minhash
-    # aggregation — persist so it runs once (same rationale as the
-    # shingle index in q_dedup_ngram_jaccard)
-    bands = _pin("lsh_bands", sf_dir, minhash_bands(spark, sf_dir))
+    # self-join sides), which share the K-min minhash exchange
+    # (ReusedExchange) inside the plan. The doc_id filter is a no-op on
+    # the key column; the self-join infers it on its sides only, and
+    # stating it here keeps the bucket-size branch an identical subtree.
+    bands = minhash_bands(spark, sf_dir).filter(F.col("doc_id").isNotNull())
     # same agg+anti-join shape as the hot-shingle cap (no sort-window)
     hot = (
         bands.groupBy("band_key")
@@ -611,10 +560,6 @@ def q_dedup_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("seg_hash", F.md5("seg_text"))
     )
-    # segs feeds BOTH the keeper agg and the join probe — pin it so
-    # the slice/explode pass runs once per sf_dir (same rationale and
-    # lifecycle as dupspan_wins above)
-    segs = _pin("segment_segs", sf_dir, segs)
     keepers = segs.groupBy("seg_hash").agg(
         F.min(F.struct("doc_id", "seg_idx")).alias("keeper")
     )
@@ -792,7 +737,6 @@ def q_dedup_dupspans(spark: SparkSession, sf_dir: str) -> DataFrame:
     slower than the lead pass at sf1 even counting the window's
     doc_id shuffle (the shuffled rows are (doc_id, pos, token) —
     narrow — and only the 32-char fp survives the projection). The
-    fp table is pinned (it feeds both consumers below). The
     keeper table is a map-side-combined groupBy(fp).agg(min, count) —
     a boilerplate span duplicated 10^6 times partial-aggregates on
     every map task, so the hot key never concentrates raw rows; the
@@ -820,10 +764,16 @@ def q_dedup_dupspans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured 3x slower than this codegen'd lead-window formulation
     # at sf1 (22s vs 6.4s cold) EVEN counting the extra doc_id
     # shuffle the window needs. The shuffle is exchanged once and
-    # reused by both consumers below (ReusedExchange). A doc shorter
-    # than k tokens simply produces no row with lead(k-1) non-null —
-    # the empty-window guard the index-array form needed comes free.
-    toks_rows = base.select("doc_id", F.posexplode("toks").alias("pos0", "tok"))
+    # reused by both consumers below (ReusedExchange); the doc_id
+    # filter is a no-op on the key column, stated here so both
+    # branches carry it — the outer join at the end infers it on the
+    # probe branch only, and two differing subtrees share nothing. A
+    # doc shorter than k tokens simply produces no row with lead(k-1)
+    # non-null — the empty-window guard the index-array form needed
+    # comes free.
+    toks_rows = base.filter(F.col("doc_id").isNotNull()).select(
+        "doc_id", F.posexplode("toks").alias("pos0", "tok")
+    )
     w_pos = Window.partitionBy("doc_id").orderBy("pos0")
     window_text = F.concat_ws(
         " ", F.col("tok"), *[F.lead("tok", i).over(w_pos) for i in range(1, k)]
@@ -838,10 +788,6 @@ def q_dedup_dupspans(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("fp").isNotNull())
     )
-    # wins feeds BOTH the keeper agg and the join probe — pin it so
-    # the sort+window+md5 pass runs once per sf_dir, not twice per
-    # query (same lifecycle/invalidations as the shingle tables)
-    wins = _pin("dupspan_wins", sf_dir, wins)
     keepers = wins.groupBy("fp").agg(
         F.min(F.struct("doc_id", "pos")).alias("keeper"),
         F.count("*").alias("cnt"),
@@ -949,10 +895,8 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", F.md5(F.concat_ws(" ", "seg")).alias("fp")
     ).distinct()
     # the corpus-scale explode+DISTINCT feeds THREE consumers (totals
-    # and both self-join sides; only identical subtrees get a
-    # ReusedExchange, the aggregate branch does not) — pin it like the
-    # other multi-consumer intermediates in this module
-    profile = _pin("overlap_profile", sf_dir, profile)
+    # and both self-join sides); all three read the DISTINCT's one
+    # exchange (ReusedExchange)
     totals = profile.groupBy("source").agg(F.count("*").alias("n_fps"))
     a, b = profile.alias("a"), profile.alias("b")
     shared = (

@@ -648,17 +648,17 @@ SEMDEDUP_MAX_BLOCK = 1024
 
 
 def _semantic_pairs(spark: SparkSession, sf_dir: str):
-    """The SemDeDup family's shared heavy intermediate: all in-cluster
-    (cluster, vec_id, cos) pairs under the block cap. The exact-cosine
-    pair scan is the family's dominant cost (an interpreted 64-dim
-    fold per pair), and it feeds THREE consumers across two queries
-    (drop decisions + max-cos audit in q_semantic_dedup, drop
-    decisions again in q_semantic_materialize) — pinned per
-    (site, sf_dir) like the dedup shingle tables so one sweep/driver
-    session computes it once. Returns None when the corpus is too
-    small to train the quantizer."""
+    """The SemDeDup family's shared heavy intermediate, built once per
+    query: trains the quantizer and returns (assigned, best) — the
+    assigned corpus and, for every vector with a smaller-id neighbor in
+    its cluster under the block cap, its max in-cluster cosine
+    (cluster, vec_id, cos). The exact-cosine pair scan is the family's
+    dominant cost (an interpreted 64-dim fold per pair). Folding it to
+    one row per vector right away lets every consumer read `best`,
+    never the pairs: the fold runs once per query, and the two
+    consumers in q_semantic_dedup share its exchange (ReusedExchange).
+    Returns None when the corpus is too small to train the quantizer."""
     from ai4orgwebscraper_spark.operators.clustering import trained_kmeans
-    from ai4orgwebscraper_spark.operators.dedup import _pin
 
     assigned, cents = trained_kmeans(spark, sf_dir)
     if not cents:
@@ -669,37 +669,36 @@ def _semantic_pairs(spark: SparkSession, sf_dir: str):
         "cluster", "vec_id", "embedding"
     )
     x, y = a.alias("x"), a.alias("y")
-    pairs = x.join(
-        y,
-        (F.col("x.cluster") == F.col("y.cluster"))
-        & (F.col("x.vec_id") > F.col("y.vec_id")),
-    ).select(
-        F.col("x.cluster").alias("cluster"),
-        F.col("x.vec_id").alias("vec_id"),
-        _cosine(F.col("x.embedding"), F.col("y.embedding")).alias("cos"),
+    best = (
+        x.join(
+            y,
+            (F.col("x.cluster") == F.col("y.cluster"))
+            & (F.col("x.vec_id") > F.col("y.vec_id")),
+        )
+        .groupBy(
+            F.col("x.cluster").alias("cluster"), F.col("x.vec_id").alias("vec_id")
+        )
+        .agg(F.max(_cosine(F.col("x.embedding"), F.col("y.embedding"))).alias("cos"))
     )
-    return _pin("semantic_pairs", sf_dir, pairs)
+    return assigned, best
 
 
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cluster SemDeDup audit: vectors seen / dropped / kept and
     the max in-cluster pairwise cosine. Oracle = unrolled Lloyd CTE
     (afinal) + the same pair rule in SQL."""
-    from ai4orgwebscraper_spark.operators.clustering import trained_kmeans
-
-    pairs = _semantic_pairs(spark, sf_dir)
-    if pairs is None:
+    shared = _semantic_pairs(spark, sf_dir)
+    if shared is None:
         return spark.createDataFrame(
             [],
             "cluster bigint, n_vectors bigint, n_dropped bigint, "
             "n_kept bigint, max_cos double, capped boolean",
         )
-    assigned, _cents = trained_kmeans(spark, sf_dir)
+    assigned, best = shared
     sizes = assigned.groupBy("cluster").agg(F.count("*").alias("csize"))
     dropped = (
-        pairs.filter(F.col("cos") >= SEMDEDUP_TAU)
+        best.filter(F.col("cos") >= SEMDEDUP_TAU)
         .select("cluster", "vec_id")
-        .distinct()
         .withColumn("is_dropped", F.lit(1))
     )
     cstats = (
@@ -710,7 +709,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.coalesce(F.col("is_dropped"), F.lit(0))).alias("n_dropped"),
         )
     )
-    pstats = pairs.groupBy("cluster").agg(F.round(F.max("cos"), 3).alias("max_cos"))
+    pstats = best.groupBy("cluster").agg(F.round(F.max("cos"), 3).alias("max_cos"))
     return (
         cstats.join(pstats, "cluster", "left")
         .join(sizes, "cluster")
@@ -769,22 +768,22 @@ def q_semantic_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: decisions are |embeddings| rows keyed by vec_id; the doc
     join is one co-keyed shuffle join + a 20-row source rollup. The
-    pair scan itself comes from the pinned _semantic_pairs table
-    shared with q_semantic_dedup — one computation per session."""
+    pair scan is _semantic_pairs' per-vector max-cosine table, the same
+    one q_semantic_dedup reads; each query trains and scans once."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    pairs = _semantic_pairs(spark, sf_dir)
-    if pairs is None:
+    shared = _semantic_pairs(spark, sf_dir)
+    if shared is None:
         return spark.createDataFrame(
             [],
             "source string, n_docs bigint, n_kept bigint, "
             "chars_kept bigint, chars_dropped bigint",
         )
+    _assigned, best = shared
     dropped = (
-        pairs.filter(F.col("cos") >= SEMDEDUP_TAU)
+        best.filter(F.col("cos") >= SEMDEDUP_TAU)
         .select("vec_id")
-        .distinct()
         .withColumn("is_dropped", F.lit(1))
     )
     keep = F.coalesce(F.col("is_dropped"), F.lit(0)) == 0

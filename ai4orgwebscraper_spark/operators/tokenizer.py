@@ -113,13 +113,9 @@ def bpe_merges(words: DataFrame, n_merges: int = N_MERGES) -> list[tuple[str, st
 
 
 def trained_bpe(spark: SparkSession, sf_dir: str) -> list[tuple[str, str, int]]:
-    """Train the merge list from the corpus. r6: the train-once memo
-    (_TRAINED_BPE_MEMO) is GONE — bench.py clears the kmeans memo per
-    run but not this one, so runs 2-3 of the q_bpe_merges leg were
-    timing a dict hit instead of BPE training (r5 ADVICE, medium).
-    bench.py is frozen for measurement, so the honest fix lives here:
-    every call recomputes from the parquet inputs. Each q_bpe_encode
-    call pays one extra vocab-sized training — N_MERGES tiny
+    """Train the merge list from the corpus. Every call recomputes from
+    the parquet inputs; no merge list is kept between calls. Each
+    q_bpe_encode call pays one vocab-sized training — N_MERGES tiny
     aggregation jobs, well under a second warm."""
     docs = load_wide(spark, sf_dir, "documents")
     words = (

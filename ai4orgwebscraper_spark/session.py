@@ -15,6 +15,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_mem() -> str:
+    """A quarter of the host's physical memory, 4g to 16g. The local-mode
+    JVM grows its heap toward the limit before it collects hard, so a
+    limit near the host's memory gets the process OOM-killed (a 16g heap
+    on a 16 GB host did, mid test suite)."""
+    total_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return f"{min(max(total_gb // 4, 4), 16)}g"
+
+
 def get_spark(
     app_name: str = "ai4orgwebscraper_spark",
     cpus: int | None = None,
@@ -53,7 +62,7 @@ def get_spark(
         # reuse=false incl. 8M-row stages never hung; the cost is a
         # pandas-import tax per task, ~1-2s per python stage.
         .config("spark.python.worker.reuse", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _driver_mem()))
         .config("spark.ui.enabled", "false")
         # shuffle spill to tmpfs: local-mode shuffles write to disk,
         # which does not scale with cores; RAM-backed shuffle keeps the

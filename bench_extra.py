@@ -1,14 +1,12 @@
 #!/usr/bin/env python
-"""r6 optimization side-benchmarks (bench.py is FROZEN for the driver;
-extra measurements live here — guide §1.4).
+"""Side benchmark: per-query timing with a noop sink, outside bench.py's
+headline protocol.
 
-Modes:
-  python bench_extra.py isolate [sf_dir]   # noop-sink per-query timing
-  python bench_extra.py kmeans  [sf_dir]   # per-phase kmeans breakdown
-  python bench_extra.py micro   [sf_dir]   # targeted micro-experiments
+    python bench_extra.py [isolate] [sf_dir] [q1,q2,...]
 
-Every timed region recomputes from the parquet inputs (no warm caches
-carried in: memo/pin state is cleared between timings).
+Each query is planned and run from its parquet inputs; no operator keeps
+state between calls, so no timing reuses an earlier query's work. Each
+query's jobs carry the description `isolate:<name>`.
 """
 
 from __future__ import annotations
@@ -27,32 +25,12 @@ def _noop(df):
     df.write.format("noop").mode("overwrite").save()
 
 
-def _clear_caches():
-    """Drop cross-call memo/pin state so each timing is cold."""
-    from ai4orgwebscraper_spark.operators import clustering, dedup
-
-    clustering._TRAINED_MEMO.clear()
-    for _k, (_fp, df) in list(dedup._PINNED.items()):
-        try:
-            df.unpersist(blocking=True)
-        except Exception:
-            pass
-    dedup._PINNED.clear()
-    try:
-        from ai4orgwebscraper_spark.operators import tokenizer
-
-        getattr(tokenizer, "_TRAINED_BPE_MEMO", {}).clear()
-    except Exception:
-        pass
-
-
 def isolate(spark, sf_dir: str, names: list[str]) -> None:
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
     out = {}
     for name in names:
-        _clear_caches()
         spark.sparkContext.setJobDescription(f"isolate:{name}")
         t0 = time.time()
         df = qs[name](spark, sf_dir)
@@ -60,92 +38,6 @@ def isolate(spark, sf_dir: str, names: list[str]) -> None:
         out[name] = round(time.time() - t0, 3)
         print(f"{name}: {out[name]}s", flush=True)
     print(json.dumps(out))
-
-
-def kmeans_breakdown(spark, sf_dir: str) -> None:
-    from pyspark.sql import functions as F
-
-    from ai4orgwebscraper_spark.operators import clustering as C
-    from ai4orgwebscraper_spark.sources.readers import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    t0 = time.time()
-    init_rows = emb.orderBy("vec_id").limit(C.K).collect()
-    cents = [[float(x) for x in r["embedding"]] for r in init_rows]
-    print(f"init collect: {time.time() - t0:.2f}s", flush=True)
-    vecs = emb.persist()
-    t0 = time.time()
-    vecs.count()
-    print(f"persist+count: {time.time() - t0:.2f}s", flush=True)
-    for it in range(3):
-        t0 = time.time()
-        assigned = C._assign(vecs, cents)
-        stats = (
-            assigned.select("cluster", F.posexplode("embedding").alias("dim", "v"))
-            .groupBy("cluster", "dim")
-            .agg(F.sum(F.col("v").cast("double")).alias("s"), F.count("*").alias("n"))
-            .collect()
-        )
-        print(f"iter {it} (assign+posexplode-stats): {time.time() - t0:.2f}s "
-              f"({len(stats)} state rows)", flush=True)
-    # variant: per-dim sum columns, no posexplode
-    dim = len(cents[0])
-    for it in range(3):
-        t0 = time.time()
-        assigned = C._assign(vecs, cents)
-        aggs = [F.sum(F.col("embedding")[d].cast("double")).alias(f"s{d}") for d in range(dim)]
-        stats = assigned.groupBy("cluster").agg(F.count("*").alias("n"), *aggs).collect()
-        print(f"iter {it} (assign+63-col-stats): {time.time() - t0:.2f}s", flush=True)
-    vecs.unpersist()
-
-
-def micro(spark, sf_dir: str) -> None:
-    """Scan-parallelism experiment on the embeddings-heavy path."""
-    from pyspark.sql import functions as F
-
-    from ai4orgwebscraper_spark.operators import similarity as S
-
-    t0 = time.time()
-    _noop(S._centroid_ranked(spark, sf_dir))
-    print(f"centroid_ranked (as-is): {time.time() - t0:.2f}s", flush=True)
-
-    from ai4orgwebscraper_spark.sources.readers import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    cents = emb.filter(F.col("vec_id") < S.N_CENTROIDS).agg(
-        F.collect_list(
-            F.struct(F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec"))
-        ).alias("cents")
-    )
-
-    def dist2(cent_vec):
-        return F.aggregate(
-            F.zip_with(
-                F.col("embedding"), cent_vec,
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    t0 = time.time()
-    _noop(
-        emb.crossJoin(F.broadcast(cents)).withColumn(
-            "ranked_cents",
-            F.array_sort(
-                F.transform(
-                    F.col("cents"),
-                    lambda c: F.struct(
-                        dist2(c["cent_vec"]).alias("d2"), c["cent_id"].alias("cent_id")
-                    ),
-                )
-            ),
-        ).drop("cents")
-    )
-    print(f"centroid_ranked (widened scan): {time.time() - t0:.2f}s", flush=True)
 
 
 HEADLINE_DEFAULT = [
@@ -160,15 +52,12 @@ def main() -> None:
     from ai4orgwebscraper_spark.session import get_spark
 
     mode = sys.argv[1] if len(sys.argv) > 1 else "isolate"
+    if mode != "isolate":
+        sys.exit(f"unknown mode {mode!r}; the one mode is isolate")
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else SF_DIR
     spark = get_spark(app_name=f"bench_extra_{mode}")
-    if mode == "isolate":
-        names = sys.argv[3].split(",") if len(sys.argv) > 3 else HEADLINE_DEFAULT
-        isolate(spark, sf_dir, names)
-    elif mode == "kmeans":
-        kmeans_breakdown(spark, sf_dir)
-    elif mode == "micro":
-        micro(spark, sf_dir)
+    names = sys.argv[3].split(",") if len(sys.argv) > 3 else HEADLINE_DEFAULT
+    isolate(spark, sf_dir, names)
     spark.stop()
 
 

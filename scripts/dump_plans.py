@@ -40,12 +40,12 @@ PICKS = {
     "q_bm25_search": "corpus stats as driver-side literals (no 1-row crossJoin BNLJ); term-df broadcast; the only data-scale shuffle is the per-doc agg; top-20 via TakeOrderedAndProject (r5)",
     "q_inverted_index": "explode -> two partial-agg'd groupBys; posting-head via rank-filtered window over (term, doc_id) — sort-based/spillable, never a per-term in-memory array; no SinglePartition exchange (r5)",
     "q_tfidf_lang_terms": "vocab-sized df table broadcast into the per-lang tf join; ranking window over tiny post-agg per-lang partitions (r5)",
-    "q_dedup_segments": "corpus-scale segment posexplode, pinned for its two consumers; keeper = map-side combined groupBy(min) on seg_hash; join-back is a shuffle join (AQE skew-join can split a hot boilerplate key — a window could not); doc reassembly groupBy bounded by doc size (r5)",
+    "q_dedup_segments": "corpus-scale segment posexplode, computed by each of its two consumers; keeper = map-side combined groupBy(min) on seg_hash; join-back is a shuffle join (AQE skew-join can split a hot boilerplate key — a window could not); doc reassembly groupBy bounded by doc size (r5)",
     "q_doc_selection": "DSIR-lite: trained vocab folded back as an in-row literal array filter — the corpus scoring pass has NO explode and NO shuffle; top-3 window runs on source-partitioned post-agg rows (r5)",
-    "q_semantic_dedup": "SemDeDup: kmeans assignment stays the broadcast-centroid in-row argmin (no corpus shuffle); the exact cosine pass is a self-join keyed on cluster restricted to sub-cap blocks (small-cluster list broadcast), so the quadratic never sees a junk block (r5)",
+    "q_semantic_dedup": "SemDeDup: kmeans assignment stays the broadcast-centroid in-row argmin (no corpus shuffle); the exact cosine pass is a self-join keyed on cluster restricted to sub-cap blocks (small-cluster list broadcast), so the quadratic never sees a junk block (r5); the pairs fold to one max-cosine row per vector, and both consumers read that aggregate's one exchange",
     "crawl_spans_dedup": "interleave-preserving span dedup over the flagship payload: keeper = map-side combined groupBy(min) on md5(text); join-back shuffle join (AQE-skew-splittable boilerplate key); per-doc reassembly groupBy bounded by doc size (r5)",
     "q_dedup_incremental": "history fingerprint store joins as a bare scan (bucketed layout: zero Exchange above it); only the delta shuffles; in-batch window partitioned by fingerprint — delta-sized (r5)",
-    "q_dedup_dupspans": "stride-1 window fps via k-1 codegen'd lead() columns over the doc_id window (3x faster than the interpreted transform() lambda at sf1), pinned for both consumers; keeper = map-side combined groupBy(min,count); interval merge under doc_id-partitioned window (r5)",
+    "q_dedup_dupspans": "stride-1 window fps via k-1 codegen'd lead() columns over the doc_id window (3x faster than the interpreted transform() lambda at sf1), both consumers reading one doc_id exchange (ReusedExchange); keeper = map-side combined groupBy(min,count); interval merge under doc_id-partitioned window (r5)",
     "q_doc_quality_buckets": "vocab-sized reference LM broadcast onto the exploded token stream; per-doc score one partial-agg'd groupBy; ntile window partitioned by source (r5)",
     "q_source_overlap": "DISTINCT (source, fp) before the fp self-join bounds every fp group by |sources| — the pair join is skew-free by construction; totals an S-row broadcast (r5)",
     "q_doc_shuffle_shards": "md5 permutation as one column expr; the only shuffle is hash-partitioning by the 256-way shard key; position window partitioned by shard — no global sort anywhere (r5)",

@@ -102,20 +102,41 @@ def test_cc_nonconvergence_raises_loudly(spark):
         dedup.connected_components(spark, nodes, edges, max_iter=2)
 
 
-def test_repeated_dedup_calls_do_not_accumulate_cached_dfs(spark, planted_sf):
-    """The pin registry must bound session storage to one cached DF per
-    call site — repeat invocations release the prior pin (ADVICE r02)."""
+def test_repeated_dedup_calls_do_not_accumulate_cached_dfs(spark, planted_sf, tmp_path):
+    """No dedup operator keeps state between calls: running the shingle
+    and LSH queries on two data directories, one of them twice, leaves
+    no persisted RDD behind in the session."""
+    import shutil
+
+    copy = str(tmp_path / "planted_copy")
+    shutil.copytree(planted_sf, copy)
     jsc = spark.sparkContext._jsc.sc()
-    pinned_before = {k for k in dedup._PINNED if k[1] == planted_sf}
-    baseline = jsc.getPersistentRDDs().size() + len(pinned_before)
-    for _ in range(3):
-        dedup.q_dedup_ngram_jaccard(spark, planted_sf).collect()
-        dedup.q_dedup_minhash_lsh(spark, planted_sf).collect()
-    assert len({k for k in dedup._PINNED if k[1] == planted_sf}) == 2
-    grown = jsc.getPersistentRDDs().size() - baseline
-    # at most the two live pins net-new — other suites' caches (shared
-    # session) are measured into the baseline, not the delta
-    assert grown <= 2, f"{grown} net-new cached RDDs after repeated dedup calls"
+    before = jsc.getPersistentRDDs().size()
+    for sf_dir in (planted_sf, copy, planted_sf):
+        dedup.q_dedup_ngram_jaccard(spark, sf_dir).collect()
+        dedup.q_dedup_minhash_lsh(spark, sf_dir).collect()
+    grown = jsc.getPersistentRDDs().size() - before
+    assert grown <= 0, f"{grown} net-new cached RDDs after repeated dedup calls"
+
+
+@pytest.mark.parametrize("query", ["q_dedup_minhash_lsh", "q_dedup_dupspans"])
+def test_multi_consumer_map_side_shuffled_once(spark, query):
+    """The heavy map side that several consumers read (the K-min
+    minhash table, the dupspans token stream) is shuffled ONCE on
+    doc_id inside the plan and reused, with no cache scan: the shared
+    work a per-call persist used to buy. Run on the sf0.001 fixture,
+    whose consumers all survive AQE (a 5-doc table prunes the empty
+    bucket-size branch)."""
+    from conftest import SF_SMALL
+
+    df = getattr(dedup, query)(spark, SF_SMALL)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0].splitlines()
+    by_doc = [ln for ln in final if "Exchange hashpartitioning(doc_id" in ln]
+    reused = [ln for ln in by_doc if "ReusedExchange" in ln]
+    assert len(by_doc) - len(reused) == 1 and reused, "\n".join(final)
+    assert not any("InMemoryTableScan" in ln for ln in final)
 
 
 def test_fingerprint_matches_text_module(spark, planted_sf):

@@ -117,10 +117,10 @@ def test_lsh_multiprobe_recall_beats_single_bucket(spark):
     assert r_multi > r_single
 
 
-def test_semantic_dedup_matches_twin_and_drops_planted(spark, planted_sf):
-    """SemDeDup twin: kmeans_py clusters + python cosine reproduce the
-    operator's per-cluster audit exactly; the planted near-identical
-    pair (vec 0 / vec 1) must produce at least one drop."""
+def _semantic_dedup_vs_twin(spark, sf_dir):
+    """Asserts q_semantic_dedup's per-cluster audit equals the twin's
+    (kmeans_py clusters + python cosine) on `sf_dir`'s embeddings as
+    they are now; returns (twin audit, operator rows)."""
     import math
     from collections import defaultdict
 
@@ -132,7 +132,7 @@ def test_semantic_dedup_matches_twin_and_drops_planted(spark, planted_sf):
 
     emb = {
         r["vec_id"]: [float(x) for x in r["embedding"]]
-        for r in spark.read.parquet(planted_sf + "/embeddings.parquet").collect()
+        for r in spark.read.parquet(sf_dir + "/embeddings.parquet").collect()
     }
     assign, _ = kmeans_py(emb, K, ITERATIONS)
 
@@ -157,7 +157,7 @@ def test_semantic_dedup_matches_twin_and_drops_planted(spark, planted_sf):
                     dropped.add(vb)
         exp[c] = (len(vids), len(dropped), len(vids) - len(dropped),
                   None if maxc is None else round(maxc, 3))
-    got = {r["cluster"]: r for r in q_semantic_dedup(spark, planted_sf).collect()}
+    got = {r["cluster"]: r for r in q_semantic_dedup(spark, sf_dir).collect()}
     assert set(got) == set(exp)
     for c, (nv, nd, nk, mc) in exp.items():
         g = got[c]
@@ -166,12 +166,41 @@ def test_semantic_dedup_matches_twin_and_drops_planted(spark, planted_sf):
             assert g["max_cos"] is None
         else:
             assert abs(g["max_cos"] - mc) <= 0.0011
+    return exp, got
+
+
+def test_semantic_dedup_matches_twin_and_drops_planted(spark, planted_sf, tmp_path):
+    """SemDeDup twin: kmeans_py clusters + python cosine reproduce the
+    operator's per-cluster audit exactly; the planted near-identical
+    pair (vec 0 / vec 1) must produce at least one drop. Then the
+    embeddings are rewritten in place in the same session and the
+    operator must follow the new vectors, not an earlier call's."""
+    import math
+    import shutil
+
+    sf_dir = str(tmp_path / "semdedup")
+    shutil.copytree(planted_sf, sf_dir)
+    exp, got = _semantic_dedup_vs_twin(spark, sf_dir)
     # the planted near-identical pair is a semantic duplicate: exactly
     # the case SemDeDup exists for — somebody must get dropped
     assert sum(nd for _, nd, _, _ in exp.values()) >= 1
     assert sum(r["n_dropped"] for r in got.values()) >= 1
     # 40-vector fixture: no cluster near SEMDEDUP_MAX_BLOCK
     assert not any(r["capped"] for r in got.values())
+
+    def unit(seed):
+        vals = [math.cos(seed * 5.3 + i * 1.7) for i in range(8)]
+        n = math.sqrt(sum(v * v for v in vals))
+        return [v / n for v in vals]
+
+    rows = [(i, unit(i), 0) for i in range(30)]
+    rows += [(30 + i, [v * 0.99 for v in unit(i)], 0) for i in range(0, 30, 3)]
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).coalesce(1).write.mode("overwrite").parquet(sf_dir + "/embeddings.parquet")
+    exp2, got2 = _semantic_dedup_vs_twin(spark, sf_dir)
+    assert exp2 != exp
+    assert sum(r["n_vectors"] for r in got2.values()) == 40
 
 
 def test_semantic_materialize_matches_twin_and_audit_totals(spark):
